@@ -1,9 +1,10 @@
 """Targeted block release for ``localCheckpoint``-ed DataFrames.
 
-Iterative operators (connected components, BFS, k-core, IVF Lloyd
-rounds, ``iterate_fixed_point``) re-checkpoint their state every round
-so the lineage stays O(1); without freeing the superseded round the
-persisted blocks grow as rounds × state size. On Spark 4.1.2
+The iteration driver (``operators/iterate.py:iterate_rounds``, which
+runs connected components, BFS, k-core, label propagation and
+``iterate_fixed_point``) re-checkpoints the state every round so the
+lineage stays O(1); without freeing the superseded round the persisted
+blocks grow as rounds × state size. On Spark 4.1.2
 ``DataFrame.unpersist()`` is a NO-OP for localCheckpointed frames (the
 persistence belongs to the internal checkpointed RDD, not the Dataset's
 cache entry — proven by tests/test_streaming.py's storage-registry

@@ -15,38 +15,22 @@ classic PRAM algorithm, cf. Kiveris et al., "Connected Components in
 MapReduce and Beyond") doubles the collapsed distance per round, so
 convergence is O(log diameter) — 20 rounds cover a 1M-hop chain.
 Dedup graphs are unions of near-cliques (diameter 1-2) and converge
-in 2-3 rounds either way. Iterations are driven from the driver loop,
-but ONLY the convergence flag (one count) crosses to the driver —
-never the data.
+in 2-3 rounds either way.
+
+Every iterative operator here (CC, BFS, k-core, label propagation)
+keeps only its step logic and runs its rounds on
+``operators.iterate.iterate_rounds``, which checkpoints, probes and
+frees each round — only a probe scalar crosses to the driver, never
+the data.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Observation
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from min_flink_spark.core.ckpt import attach_backing, unpersist_checkpoint
-
-
-def _materialize_with_metric(df: DataFrame, metric: Column) -> tuple[DataFrame, int]:
-    """Materialize one iteration's state AND return a scalar probe in a
-    SINGLE Spark job (r15, guide §1.2 — the iterative families paid a
-    separate 2-job AQE count per round just to decide loop exit).
-
-    ``localCheckpoint(eager=False)`` marks the plan's RDD; the noop
-    write (guide §1.4) is the one job that computes every partition —
-    persisting the blocks and truncating lineage as a side effect —
-    while an ``observe`` node riding the same plan collects ``metric``
-    without any shuffle. Returns the checkpointed frame (lineage = one
-    LogicalRDD, releasable via ``unpersist_checkpoint``) and the metric
-    value (0 when the frame is empty — SQL aggregates yield NULL there).
-    """
-    ck = df.localCheckpoint(eager=False)
-    obs = Observation()
-    ck.observe(obs, metric.alias("m")).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    return ck, int(obs.get["m"] or 0)
+from min_flink_spark.operators.iterate import iterate_rounds, materialize_with_metrics
 
 
 def connected_components(
@@ -79,19 +63,14 @@ def connected_components(
     labels = sym.select(F.col("u").alias("node")).distinct().withColumn(
         "component", F.col("node")
     )
-    converged = False
-    prev_ckpt: DataFrame | None = None
     # the self-vote union leg needs a typed NULL for its _old twin
     comp_type = dict(labels.dtypes)["component"]
-    for _ in range(max_iter):
-        # One vote stream: every neighbor's label PLUS the node's own
-        # (r15 restructure, guide §2.4 — the self label used to arrive
-        # via a separate labels⟕neighbor_min join, a third join per
-        # round; the union leg folds it into the same aggregation).
-        # min(component) over the stream = least(own, min-neighbor),
-        # exactly the old two-step value; _old rides the self leg
-        # (one non-null per node) so the convergence probe needs no
-        # extra alignment join.
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
+        # One vote stream: every neighbor's label PLUS the node's own,
+        # so one aggregation yields least(own, min-neighbor) without a
+        # third join per round; _old rides the self leg (one non-null
+        # per node) so the convergence probe needs no alignment join.
         votes = (
             sym.join(labels, sym["v"] == labels["node"])
             .select(
@@ -116,49 +95,31 @@ def connected_components(
         parents = labels.select(
             F.col("node").alias("_pnode"), F.col("component").alias("_pcomp")
         )
-        updated = (
-            stepped.join(parents, stepped["component"] == F.col("_pnode"), "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("component"), F.coalesce("_pcomp", F.col("component"))
-                ).alias("component"),
-                "_old",
-            )
+        return stepped.join(
+            parents, stepped["component"] == F.col("_pnode"), "left"
+        ).select(
+            "node",
+            F.least(
+                F.col("component"), F.coalesce("_pcomp", F.col("component"))
+            ).alias("component"),
+            "_old",
         )
-        # Materialize + convergence probe in ONE job (r15): the noop
-        # write computes and persists every partition (truncating the
-        # exponentially growing iterative lineage) while the observe
-        # metric counts changed labels in-flight — the old pattern paid
-        # an eager-checkpoint job plus a separate 2-job AQE count per
-        # round. Free the superseded round's blocks so the loop holds
-        # at most two label copies, not max_iter.
-        updated, changed = _materialize_with_metric(
-            updated,
-            F.sum((F.col("component") != F.col("_old")).cast("long")),
+
+    # labels that moved, counted inside each round's job; 0 = fixed point
+    moved = F.sum((F.col("component") != F.col("_old")).cast("long"))
+    try:
+        labels = iterate_rounds(
+            labels, step, max_iter, probe=lambda _: moved,
+            checkpoint_initial=False, strict=strict,
         )
-        if prev_ckpt is not None:
-            # DataFrame.unpersist() is a no-op for localCheckpointed
-            # frames on Spark 4.1.2 — free the checkpoint RDD directly
-            unpersist_checkpoint(prev_ckpt)
-        prev_ckpt = updated
-        labels = updated.drop("_old")
-        if changed == 0:
-            converged = True
-            break
-    if prev_ckpt is not None:
-        # ≥1 round ran, so the returned labels derive from the final
-        # round's checkpoint — the internal symmetrized edge list is
-        # unreachable downstream; free it (a long session running CC
-        # repeatedly would otherwise pin one edge-list copy per call)
-        unpersist_checkpoint(sym)
-    if strict and not converged:
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} rounds "
-            "(component diameter exceeds max_iter); raise max_iter or pass "
-            "strict=False to accept split components"
-        )
-    return labels
+    finally:
+        if max_iter > 0:
+            # ≥1 round ran, so the labels derive from a round's
+            # checkpoint — the internal symmetrized edge list is
+            # unreachable downstream; free it (a long session running
+            # CC repeatedly would otherwise pin one copy per call)
+            unpersist_checkpoint(sym)
+    return labels.drop("_old")
 
 
 def pagerank_integer(
@@ -195,8 +156,8 @@ def pagerank_integer(
     (bucketing at rest) to make every round co-located; only the loop
     COUNTER lives on the driver, never data. Fixed iteration count =
     fixed plan depth, so the whole unrolled computation is one lazy
-    Catalyst plan (callers of long loops should localCheckpoint per
-    round as connected_components does)."""
+    Catalyst plan (long loops should run their rounds on
+    ``operators.iterate.iterate_rounds``, which checkpoints each one)."""
     e = edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
     # materialize the edge list once: it is scanned TWICE PER ROUND
     # (contribution join + degree join) plus the node derivations — an
@@ -349,18 +310,14 @@ def triangle_counts(
             deg_bound, id_bound = int(max_deg), int(max_id)
         else:
             # bounded-metadata probe (3 scalars), fused into the degree
-            # frame's materialization job (r15): the observe metrics
-            # ride the checkpointing noop write, so the probe no longer
-            # costs its own 2-job AQE aggregate
-            deg = deg.localCheckpoint(eager=False)
-            obs = Observation()
-            deg.observe(
-                obs,
+            # frame's materialization job (r15), so the probe costs no
+            # job of its own
+            deg, mx = materialize_with_metrics(
+                deg,
                 F.max("deg").alias("md"),
                 F.max("node").alias("mxn"),
                 F.min("node").alias("mnn"),
-            ).write.format("noop").mode("overwrite").save()
-            mx = obs.get
+            )
             if mx["md"] is not None and mx["mnn"] >= 0:
                 deg_bound, id_bound = int(mx["md"]), int(mx["mxn"])
     if deg_bound is not None:
@@ -512,24 +469,19 @@ def bfs_hops(
     Per round: the newest frontier equi-joins the (directed) edge
     list, and discovered endpoints anti-join the visited set — two
     key-joins on the node id, co-locatable by bucketing, never a
-    global structure. The visited set is localCheckpointed per round
-    (iterative-lineage discipline, as ``connected_components``), the
-    superseded round's blocks are freed, and only an empty-frontier
-    early-exit count (one scalar) crosses to the driver. Rounds are
-    FIXED at ``max_hops`` so the result is a pure function of
+    global structure. Rounds run on ``iterate_rounds``: the visited set
+    is checkpointed per round, and the new-frontier count, fused into
+    the round's job, stops the search early when it reads 0. Rounds are
+    capped at ``max_hops`` so the result is a pure function of
     (edges, sources, max_hops) — engine-replayable by unrolling.
 
     Pass a symmetrized edge list for undirected semantics; edges are
     followed src→dst as given.
     """
-    visited = (
-        sources.select(F.col(node_col)).distinct()
-        .withColumn("hops", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    prev_v = visited  # the seed checkpoint is superseded by round 1
-    for h in range(1, max_hops + 1):
+    def hop(visited: DataFrame, h: int) -> DataFrame:
+        # round 1's frontier is every seed: without the (tautological)
+        # filter its exchange is shared with the anti-join's visited side
+        frontier = visited if h == 1 else visited.filter(F.col("hops") == h - 1)
         discovered = (
             frontier.join(edges, frontier[node_col] == edges[src])
             .select(F.col(dst).alias(node_col))
@@ -537,22 +489,14 @@ def bfs_hops(
             .join(visited, node_col, "left_anti")
             .withColumn("hops", F.lit(h))
         )
-        # materialize the round + count the new frontier in ONE job
-        # (r15, see _materialize_with_metric — was an eager-checkpoint
-        # job plus a separate 2-job empty-frontier count per hop)
-        nxt, frontier_n = _materialize_with_metric(
-            visited.unionByName(discovered),
-            F.sum((F.col("hops") == h).cast("long")),
-        )
-        if prev_v is not None:
-            # targeted release: Dataset.unpersist() would be a no-op here
-            unpersist_checkpoint(prev_v)
-        prev_v = nxt
-        frontier = nxt.filter(F.col("hops") == h)
-        visited = nxt
-        if frontier_n == 0:
-            break
-    return visited
+        return visited.unionByName(discovered)
+
+    seeds = sources.select(F.col(node_col)).distinct().withColumn("hops", F.lit(0))
+    # the probe counts the new frontier; an empty one ends the search
+    return iterate_rounds(
+        seeds, hop, max_hops,
+        probe=lambda h: F.sum((F.col("hops") == h).cast("long")),
+    )
 
 
 def k_core(
@@ -583,34 +527,30 @@ def k_core(
     persisted) — callers that aggregate the full peeling trajectory need
     every round alive until their final action runs. With
     ``keep_all=False`` only the LAST round's frame is returned (a 1-list
-    for signature stability) and each superseded round's checkpoint
-    blocks are freed as the next round materializes — at most two edge
+    for signature stability) and ``iterate_rounds`` frees each
+    superseded round as the next one materializes — at most two edge
     frames persisted at any moment, so a long driver session peeling
     many graphs (or deep ``rounds``) holds O(1) copies instead of
-    rounds× (VERDICT r6 item 4). ``DataFrame.unpersist()`` is a no-op
-    for localCheckpointed frames on this Spark; the release targets the
-    checkpoint RDD (core.ckpt.unpersist_checkpoint).
+    rounds× (VERDICT r6 item 4).
     """
     if rounds < 1:
         raise ValueError(f"rounds must be >= 1, got {rounds}")
-    out: list[DataFrame] = []
-    cur = edges
-    prev: DataFrame | None = None
-    for _ in range(rounds):
+
+    def peel(cur: DataFrame, _: int) -> DataFrame:
         deg = cur.groupBy(F.col(src).alias("_n")).agg(
             F.count(F.lit(1)).alias("_d")
         )
         keep = deg.filter(F.col("_d") >= k).select("_n")
-        cur = (
-            cur.join(keep, cur[src] == keep["_n"], "left_semi")
-            .join(keep, cur[dst] == keep["_n"], "left_semi")
-            .localCheckpoint(eager=True)
+        return cur.join(keep, cur[src] == keep["_n"], "left_semi").join(
+            keep, cur[dst] == keep["_n"], "left_semi"
         )
-        if not keep_all and prev is not None:
-            unpersist_checkpoint(prev)
-        prev = cur
-        out.append(cur)
-    return out if keep_all else out[-1:]
+
+    frames: list[DataFrame] = []
+    last = iterate_rounds(
+        edges, peel, rounds, checkpoint_initial=False,
+        trajectory=frames if keep_all else None,
+    )
+    return frames if keep_all else [last]
 
 
 def label_propagation(
@@ -639,39 +579,29 @@ def label_propagation(
     KEEPS its current label rather than vanishing. Per round: one
     equi-join of the edge list with the label frame on the node id
     (bucketing-co-locatable), a (node, label) hash-agg with map-side
-    combine, one node-partitioned row_number window to pick the
-    argmax, and a label-frame-sized left join to carry no-vote nodes —
-    no global structure, no driver crossing. Each round's label frame
-    is localCheckpointed and the superseded round's blocks are freed
-    (iterative-lineage discipline); callers release the FINAL frame
-    via ``release_backing`` after their last action.
+    combine, a ``min_by`` hash aggregate to pick the argmax, and a
+    label-frame-sized left join to carry no-vote nodes — no global
+    structure, no driver crossing. Rounds run on ``iterate_rounds``,
+    which checkpoints each round's label frame and frees the superseded
+    one; callers release the FINAL frame via ``release_backing`` after
+    their last action.
 
     Reference parity: none (min-flink trims all graph processing);
     this extends the engine's iterative-graph family (CC, PageRank,
     triangles, BFS, k-core).
     """
-    labels = (
-        edges.select(F.col(src).alias("node"))
-        .unionByName(edges.select(F.col(dst).alias("node")))
-        .distinct()
-        .withColumn("label", F.col("node"))
-        .localCheckpoint(eager=True)
-    )
-    prev = labels
-    for _ in range(rounds):
+    def vote(labels: DataFrame, _: int) -> DataFrame:
         votes = (
             edges.join(labels, edges[src] == labels["node"])
             .select(F.col(dst).alias("node"), "label")
             .groupBy("node", "label")
             .agg(F.count(F.lit(1)).alias("_n"))
         )
-        # argmax as a sort-free min_by aggregation (r15, guide §1.2):
-        # the r14 row_number window sorted every node's vote partition
-        # just to pick one row; min over (−count, label) selects the
-        # SAME winner — most votes, ties to the smallest label — with
-        # a hash aggregate and map-side partial combine instead of a
-        # sort. Works for any orderable label type (only the count is
-        # negated).
+        # argmax as a sort-free min_by aggregation (r15): min over
+        # (−count, label) selects the winner — most votes, ties to the
+        # smallest label — with a hash aggregate and map-side partial
+        # combine instead of a sort. Works for any orderable label type
+        # (only the count is negated).
         winners = votes.groupBy("node").agg(
             F.min_by(
                 "label", F.struct((-F.col("_n")).alias("_nn"), F.col("label"))
@@ -679,14 +609,14 @@ def label_propagation(
         )
         # no-vote nodes (directed input) keep their current label —
         # without this carry they would silently vanish from round 2 on
-        labels = (
-            labels.join(winners, "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("_new"), F.col("label")).alias("label"),
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(winners, "node", "left").select(
+            "node", F.coalesce(F.col("_new"), F.col("label")).alias("label")
         )
-        unpersist_checkpoint(prev)
-        prev = labels
-    return labels
+
+    labels = (
+        edges.select(F.col(src).alias("node"))
+        .unionByName(edges.select(F.col(dst).alias("node")))
+        .distinct()
+        .withColumn("label", F.col("node"))
+    )
+    return iterate_rounds(labels, vote, rounds)

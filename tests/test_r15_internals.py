@@ -42,7 +42,7 @@ def test_materialize_with_metric_single_job_and_releasable(spark):
     (b) truncate lineage to one LogicalRDD leaf, and (c) leave blocks
     releasable via unpersist_checkpoint."""
     from min_flink_spark.core.ckpt import unpersist_checkpoint
-    from min_flink_spark.operators.graph import _materialize_with_metric
+    from min_flink_spark.operators.iterate import _materialize_with_metric
 
     df = spark.range(0, 1000, 1, 4).withColumn("flag", (F.col("id") % 5 == 0))
     ck, n = _materialize_with_metric(df, F.sum(F.col("flag").cast("long")))

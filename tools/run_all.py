@@ -1,6 +1,8 @@
-"""One-shot local CI: strict oracle gate → pytest → bench → plan audit.
+"""One-shot local CI: strict oracle gate → pytest → plan audit.
 
-Usage: python tools/run_all.py [--skip-bench] [--skip-audit]
+Usage: python tools/run_all.py [--skip-audit]
+
+Performance is measured separately with perfbench (perfbench/README.md).
 
 Runs each stage as a subprocess (fresh JVM per stage, like the driver
 does) and stops at the first failure with a nonzero exit. This is the
@@ -41,7 +43,6 @@ STAGES = [
         ],
     ),
     ("pytest", [sys.executable, "-m", "pytest", "tests/", "-q"]),
-    ("bench (sf0.1)", [sys.executable, "bench.py"]),
     (
         "plan audit",
         [sys.executable, "tools/plan_audit.py", "/root/testdata/sf0.01", "--write", "PLAN_AUDIT.md"],
@@ -50,11 +51,7 @@ STAGES = [
 
 
 def main() -> None:
-    skip = set()
-    if "--skip-bench" in sys.argv:
-        skip.add("bench (sf0.1)")
-    if "--skip-audit" in sys.argv:
-        skip.add("plan audit")
+    skip = {"plan audit"} if "--skip-audit" in sys.argv else set()
     for name, cmd in STAGES:
         if name in skip:
             print(f"-- {name}: skipped")
