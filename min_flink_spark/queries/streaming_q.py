@@ -71,8 +71,8 @@ def q_streaming_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_streaming_running_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Continuous keyed reduce on the streaming stateful path
-    (applyInPandasWithState): per-record emission of running partials
+    """Continuous keyed reduce on the streaming stateful path (the JVM
+    running-reduce operator): per-record emission of running partials
     (StreamGroupedReduce.java:35-53), checked against the batch
     window-cumsum oracle.
 
@@ -92,9 +92,9 @@ def q_streaming_running_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fn = RunningReduceFunction("user_id", "event_id", "value", "sum", value_type="bigint")
     # ~1.5k keys: narrow state widths beat the batch default (each
-    # partition costs a state-store instance + an Arrow round-trip per
-    # batch). Swept 4/8/16/32 at sf0.1: 1.95/1.50/1.43/1.52 s — 16 is
-    # the flat bottom of the curve.
+    # partition costs a state-store instance per batch). Swept 4/8/16/32
+    # at sf0.1 on the earlier pandas operator: 1.95/1.50/1.43/1.52 s —
+    # 16 is the flat bottom of the curve.
     with shuffle_partitions(spark, 16):
         out = run_to_completion(
             process_keyed(s, ["user_id"], fn, output_mode="update"),

@@ -5,11 +5,20 @@ state kind, ``FC/api/common/state/KeyedStateStore.java:74``), a
 continuously-emitting keyed reduce (``StreamGroupedReduce.java:11-54``),
 and a vestigial ``KeyedProcessFunction`` (``FSJ/api/functions/
 KeyedProcessFunction.java`` — processElement + onTimer, never wired to
-the API). Spark-side this is ``applyInPandasWithState``: per-key
-GroupState + processing-time timeouts, Arrow-batched.
+the API).
 
-``KeyedProcessFunction`` here is the user-facing class; ``process_keyed``
-wires it into a streaming plan. State is a single Row matching
+Two Spark-side operators, both keeping per-key state in Spark's
+batch-versioned state store (a replayed batch reads the same snapshot):
+
+- the built-in keyed reduce (``RunningReduceFunction``: sum/min/max over
+  bigint or double) runs as a JVM ``flatMapGroupsWithState`` operator
+  (``RunningReduce.java``, compiled and attached by ``jvm.py`` on first
+  use) — no Python worker, no Arrow round trip;
+- a user ``KeyedProcessFunction`` runs through ``applyInPandasWithState``:
+  per-key GroupState + processing-time timeouts, Arrow-batched.
+
+``process_keyed`` wires either into a streaming plan. A
+``KeyedProcessFunction``'s state is a single Row matching
 ``state_schema`` (= ValueState semantics); ``on_timeout`` ≈ the
 reference's timer callback (processing-time only — exactly the trim's
 capability, ``StreamSourceContexts.java:41-47``).
@@ -17,12 +26,16 @@ capability, ``StreamSourceContexts.java:41-47``).
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterable
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import IntegralType
+
+from min_flink_spark.streaming import jvm
 
 
 class KeyedProcessFunction:
@@ -53,11 +66,18 @@ class KeyedProcessFunction:
 def process_keyed(
     df: DataFrame,
     keys: list[str],
-    fn: KeyedProcessFunction,
+    fn: KeyedProcessFunction | RunningReduceFunction,
     output_mode: str = "update",
     timeout_ms: int | None = None,
 ) -> DataFrame:
-    """Wire a KeyedProcessFunction into a (streaming) grouped plan.
+    """Wire a KeyedProcessFunction or a RunningReduceFunction into a
+    (streaming) grouped plan.
+
+    A ``RunningReduceFunction`` runs as the JVM stateful operator
+    ``RunningReduce.java`` (``flatMapGroupsWithState``); it raises
+    ``ValueError`` unless ``keys == [fn.key_col]``, ``timeout_ms`` is
+    None and ``output_mode`` is ``"update"``. Any other function runs
+    through ``applyInPandasWithState``.
 
     One shuffle on the key; state lives in the executor-side state store
     partitioned identically, so a key's records and state are always
@@ -66,9 +86,12 @@ def process_keyed(
 
     Partition-count note: the stateful shuffle width is fixed at the
     query's FIRST run (state stores cannot re-partition); each partition
-    costs a state-store instance + an Arrow/Python round-trip per batch.
+    costs a state-store instance per batch (plus an Arrow/Python round
+    trip on the ``applyInPandasWithState`` path).
     Wrap query start in ``runner.shuffle_partitions(spark, n)`` to size
     it to key volume rather than the batch default."""
+    if isinstance(fn, RunningReduceFunction):
+        return _running_reduce(df, keys, fn, output_mode, timeout_ms)
 
     def _handle(key: tuple, pdf_iter: Iterable[pd.DataFrame], state: GroupState):
         current: tuple | None = tuple(state.get) if state.exists else None
@@ -120,14 +143,19 @@ def process_keyed(
     )
 
 
-class RunningReduceFunction(KeyedProcessFunction):
-    """The reference's continuous keyed reduce, exactly: per input
-    record, state ← reduce(state, value) and the updated partial is
-    emitted (StreamGroupedReduce.java:35-53; first record emitted
-    as-is). Order within a batch = ``order_col``.
-    """
+class RunningReduceFunction:
+    """Spec of the reference's continuous keyed reduce, exactly: per
+    input record, state ← reduce(state, value) and the updated partial
+    is emitted (StreamGroupedReduce.java:35-53; first record emitted
+    as-is). Order within a batch = ``order_col``; ties keep arrival
+    order (a stable sort).
 
-    needs_full_group = True  # running order spans all chunks of a batch
+    ``process_keyed`` runs it as the JVM operator in
+    ``RunningReduce.java``: ``key_col`` and ``order_col`` must be
+    integral columns (emitted as bigint), ``value_type`` is ``bigint``
+    or ``double`` and the key list must be ``[key_col]``. A null key,
+    order or value fails the query.
+    """
 
     def __init__(
         self,
@@ -139,47 +167,48 @@ class RunningReduceFunction(KeyedProcessFunction):
     ):
         if op not in ("sum", "min", "max"):
             raise ValueError(f"unsupported running-reduce op: {op!r}")
-        self.key_col, self.order_col, self.value_col, self.op = key_col, order_col, value_col, op
         # bigint values → exact int64 state: a running DOUBLE sum is
         # accumulation-order-dependent and can't be replayed bit-exactly
         # by another engine; fixed-point callers pre-scale to ints
+        if value_type not in ("bigint", "double"):
+            raise ValueError(f"unsupported running-reduce value_type: {value_type!r}")
+        self.key_col, self.order_col, self.value_col, self.op = key_col, order_col, value_col, op
         self.value_type = value_type
-        self.state_schema = f"acc {value_type}"
         self.output_schema = (
             f"{key_col} bigint, {order_col} bigint, "
             f"{value_col} {value_type}, running {value_type}"
         )
 
-    def process_element(self, key, rows, state):
-        import numpy as np
 
-        rows = rows.sort_values(self.order_col)
-        np_type = "int64" if self.value_type == "bigint" else "float64"
-        v = rows[self.value_col].to_numpy(dtype=np_type)
-        # vectorized running aggregate, seeded with prior state: the
-        # per-record emission contract with none of the per-row Python
-        if self.op == "sum":
-            running = np.cumsum(v)
-            if state is not None:
-                running = running + state[0]
-        elif self.op == "min":
-            running = np.minimum.accumulate(
-                np.minimum(v, state[0]) if state is not None else v
-            )
-        else:  # max
-            running = np.maximum.accumulate(
-                np.maximum(v, state[0]) if state is not None else v
-            )
-        out = pd.DataFrame(
-            {
-                self.key_col: key[0],
-                self.order_col: rows[self.order_col].to_numpy(),
-                self.value_col: v,
-                "running": running,
-            }
+_RUNNING_REDUCE_SOURCE = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "RunningReduce.java"
+)
+
+
+def _running_reduce(
+    df: DataFrame, keys: list[str], fn: RunningReduceFunction, output_mode: str,
+    timeout_ms: int | None,
+) -> DataFrame:
+    if list(keys) != [fn.key_col]:
+        raise ValueError(
+            f"running reduce groups by its key_col {fn.key_col!r} alone, got keys {keys!r}"
         )
-        if len(running):
-            last = int(running[-1]) if self.value_type == "bigint" else float(running[-1])
-        else:
-            last = state[0] if state else None
-        return out, (last,)
+    if timeout_ms is not None:
+        raise ValueError("running reduce state never times out; timeout_ms is not supported")
+    if output_mode != "update":
+        raise ValueError(f"running reduce emits in update mode only, got {output_mode!r}")
+    for c in (fn.key_col, fn.order_col):
+        if not isinstance(df.schema[c].dataType, IntegralType):
+            raise ValueError(
+                f"running reduce needs an integral {c!r}, "
+                f"got {df.schema[c].dataType.simpleString()}"
+            )
+    spark = df.sparkSession
+    jvm.attach(spark, _RUNNING_REDUCE_SOURCE)
+    events = df.select(
+        F.col(fn.key_col).cast("bigint"),
+        F.col(fn.order_col).cast("bigint"),
+        F.col(fn.value_col).cast(fn.value_type),
+    )
+    op = spark._jvm.min_flink_spark.streaming.RunningReduce
+    return DataFrame(op.plan(events._jdf, fn.op), spark)

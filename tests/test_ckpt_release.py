@@ -238,7 +238,8 @@ def test_gated_graph_queries_release_clean(spark, sf_dir):
         out = QUERIES[name](spark, sf_dir)
         assert out.count() > 0
         assert release_backing(out) >= 1, f"{name} lost its release handle"
-        assert _persistent_rdd_ids(_jsc(spark)) == before, (
+        # one-sided for the ContextCleaner reason in the pq_topk test
+        assert not (_persistent_rdd_ids(_jsc(spark)) - before), (
             f"{name} left persisted RDDs pinned"
         )
 
@@ -333,7 +334,8 @@ def test_label_propagation_frees_superseded_rounds(spark):
     assert leaked == set(checkpoint_rdd_ids(labels)), f"extra blocks: {leaked}"
     assert labels.count() == 3
     unpersist_checkpoint(labels)
-    assert _persistent_rdd_ids(_jsc(spark)) == before
+    # one-sided for the ContextCleaner reason in the pq_topk test
+    assert not (_persistent_rdd_ids(_jsc(spark)) - before)
 
 
 _CHAIN8 = [(i, i + 1) for i in range(1, 9)]

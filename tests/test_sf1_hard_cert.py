@@ -11,6 +11,7 @@ made their naive oracles replay directly) equivalent too, so they
 stay usable against a future adversarial corpus.
 """
 
+import os
 import subprocess
 import sys
 
@@ -26,7 +27,7 @@ def test_staged_replay_matches_decorators_at_sf0001():
         capture_output=True,
         text=True,
         timeout=600,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert proc.returncode == 0, proc.stdout[-2000:] + proc.stderr[-2000:]
     assert "4/4 strict-ok" in proc.stdout

@@ -8,9 +8,10 @@ module level (their heavy work only runs under __main__).
 """
 
 import importlib
+import os
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), os.pardir, "tools"))
 
 
 def test_measurement_tools_importable():

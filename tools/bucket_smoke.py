@@ -26,10 +26,11 @@ Usage: python tools/bucket_smoke.py [sf_dir] [--buckets 32] [--reps 2]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 

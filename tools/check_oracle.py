@@ -14,12 +14,13 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 from datetime import date, datetime
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from min_flink_spark.core.ckpt import release_backing
 from min_flink_spark.session import get_spark

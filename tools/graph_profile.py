@@ -26,7 +26,7 @@ import shutil
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from min_flink_spark.queries import QUERIES  # noqa: E402
 from min_flink_spark.session import get_spark  # noqa: E402

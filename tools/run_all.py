@@ -12,6 +12,7 @@ exact sequence to run before ending a build session.
 from __future__ import annotations
 
 import subprocess
+import os
 import sys
 import time
 
@@ -58,7 +59,7 @@ def main() -> None:
             continue
         t0 = time.monotonic()
         print(f"-- {name} ...", flush=True)
-        r = subprocess.run(cmd, cwd="/root/repo")
+        r = subprocess.run(cmd, cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
         dt = time.monotonic() - t0
         if r.returncode != 0:
             print(f"-- {name}: FAILED (rc={r.returncode}, {dt:.0f}s)")

@@ -40,10 +40,11 @@ and a closing summary with per-query slopes between consecutive points
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from min_flink_spark.core.ckpt import release_backing  # noqa: E402
 from min_flink_spark.session import get_spark  # noqa: E402

@@ -55,13 +55,15 @@ Usage:  python tools/sf1_hard_cert.py [/tmp/sf1]
 from __future__ import annotations
 
 import re
+import os
 import sys
 import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tools"))
 
 import check_oracle  # noqa: E402  (tools/check_oracle.py)
 from min_flink_spark.core.ckpt import release_backing  # noqa: E402

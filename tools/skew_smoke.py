@@ -62,10 +62,11 @@ Usage: python tools/skew_smoke.py --natural /tmp/sf10 [--salts 16]
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F
 

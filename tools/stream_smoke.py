@@ -2,9 +2,10 @@
 
 Bounded streams from the in-repo Python DataSource's STREAM reader
 drive (a) the stateless shuffle+agg path and (b) the stateful
-applyInPandasWithState path at two sizes, printing rows/s and the
-size-scaling ratio — the number that says whether streaming throughput
-is shuffle-bound (scales out) or harness-bound. The fixed
+running-reduce operator (JVM flatMapGroupsWithState) at two sizes,
+printing rows/s and the size-scaling ratio — the number that says
+whether streaming throughput is shuffle-bound (scales out) or
+harness-bound. The fixed
 Structured-Streaming lifecycle (~1-2 s per query) is measured
 separately via the small size so the big-size figure approximates
 steady-state micro-batch throughput.
@@ -15,10 +16,11 @@ Usage: python tools/stream_smoke.py [small_rows] [big_rows]
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
